@@ -51,8 +51,9 @@ def _emb(spark, sf_dir):
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the full forward path (views → hierarchy fixpoint → DFS
-    row table) over the vocabulary bridged from region/nation."""
+    """Flagship: the full forward path (triples → local DFS kernel as a
+    grouped map → DFS row table) over the vocabulary bridged from
+    region/nation."""
     from skosconverter_spark.operators.render import document_rows
 
     triples = triples_from_tpch(spark, "/root/testdata/sf0.001")
@@ -69,9 +70,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_skos_levels(spark, sf_dir):
-    from skosconverter_spark.plans.hierarchy import dfs_rows
+    from skosconverter_spark.operators.render import document_rows
 
-    rows = dfs_rows(triples_from_tpch(spark, sf_dir), EngineConfig())
+    rows = document_rows(triples_from_tpch(spark, sf_dir), EngineConfig())
     return rows.filter(F.col("origin") != "ghost").select(
         "uri", "label", "level", "section"
     )

@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
-from skosconverter_spark.operators.render import document_rows, render_documents, render_text_local
+from skosconverter_spark.operators.render import (
+    document_rows,
+    guard_driver_sized,
+    render_documents,
+    render_text_local,
+)
 from skosconverter_spark.operators.validate import gate, validation_report
 from skosconverter_spark.sources.docs import docs_from_directory
 from skosconverter_spark.sources.parse_udf import doc_errors, extract_triples, ok_triples
@@ -106,14 +111,15 @@ def convert_directory(
             str(out_root / "triples")
         )
     else:
+        # one output row per input FILE (not per triple) — but a
+        # million-file batch would still overwhelm the driver loop, so
+        # cap the file count. The guard counts the path-only listing
+        # (binaryFile skips reading content nobody selects); guarding the
+        # rendered table instead would run parse → DFS → render twice.
+        guard_driver_sized(docs.select("url"), "convert_directory per-file render", 100_000)
         per_doc = render_documents(
             document_rows_per_doc(extracted, cfg), fmt, vocab_col="vocab_id"
         )
-        # one row per input FILE (not per triple) — but a million-file
-        # batch would still overwhelm the driver loop, so guard it too
-        from skosconverter_spark.operators.render import guard_driver_sized
-
-        guard_driver_sized(per_doc, "convert_directory per-file render", 100_000)
         for r in per_doc.collect():
             name = Path(r.vocab_id).stem + _EXT[fmt]
             (out_root / name).write_text(r.payload, encoding="utf-8")
@@ -127,34 +133,7 @@ def convert_directory(
 
 
 def document_rows_per_doc(extracted: DataFrame, config: EngineConfig) -> DataFrame:
-    """DFS row tables for MANY documents at once: group triples by source
-    document and run the local DFS kernel per group (one vocabulary = one
-    grouped-map call — documents are independent, so a directory of
-    vocabularies renders fully in parallel)."""
-    import pandas as pd
-
-    from skosconverter_spark.operators.render import _DOC_ROWS_SCHEMA
-    from skosconverter_spark.plans.local_dfs import dfs_rows_local
-
-    src = extracted.filter(F.col("status") == "ok").select(
-        "src_url", "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"
-    )
-
-    def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = dfs_rows_local(
-            list(
-                zip(
-                    pdf["subj"], pdf["pred"], pdf["obj"],
-                    pdf["obj_is_literal"], pdf["obj_lang"], pdf["seq"],
-                )
-            ),
-            config,
-        )
-        out = pd.DataFrame(rows) if rows else pd.DataFrame(
-            columns=[f.split()[0] for f in _DOC_ROWS_SCHEMA.split(", ")]
-        )
-        out["vocab_id"] = pdf["src_url"].iloc[0]
-        return out
-
-    schema = _DOC_ROWS_SCHEMA + ", vocab_id string"
-    return src.groupBy("src_url").applyInPandas(per_doc, schema)
+    """DFS row tables for MANY documents at once: one vocabulary per
+    source document (document_rows grouped by ``src_url``), so a
+    directory of vocabularies renders fully in parallel."""
+    return document_rows(extracted.filter(F.col("status") == "ok"), config, vocab_col="src_url")

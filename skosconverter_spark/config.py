@@ -10,9 +10,10 @@ Adds engine-specific knobs:
 - ``bug_compat``: reproduce the reference's observed markdown→SKOS
   behavior exactly (SURVEY.md §2.10 D1/D3/D5) instead of the intended
   semantics. The P/R gate scores bug-compat mode.
-- ``max_iterations``: safety cap for iterative fixpoints (hierarchy
-  closure, connected components). The reference hard-caps depth at 20
-  (skos_converter.py:342).
+- ``max_iterations``: safety cap for the validator's iterative path
+  searches (cycle detection, depth check; the reference hard-caps depth
+  at 20, skos_converter.py:342). It does not cap the rendered
+  hierarchy: the DFS kernel (plans.local_dfs) emits every level.
 """
 
 from __future__ import annotations

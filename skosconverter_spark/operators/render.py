@@ -6,9 +6,10 @@ Byte-identical re-expressions of the reference's four forward sinks
 
 Split in two layers:
 
-1. ``document_rows`` — Spark: the distributed DFS row table
-   (plans.hierarchy.dfs_rows) joined with per-concept metadata
-   (plans.views.concept_meta). All heavy relational work happens here.
+1. ``document_rows`` — the DFS row table with full concept metadata:
+   the local DFS kernel (plans.local_dfs) run inside
+   ``applyInPandas``, one vocabulary = one group = one Python call.
+   A vocabulary is driver-sized by contract, as in the reference.
 2. ``render_{csv,markdown,json,xml}_rows`` — pure-Python kernels over
    the ordered row list of ONE vocabulary document. Golden-path string
    assembly stays in Python (never Spark SQL string functions — §4.3)
@@ -27,8 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
-from skosconverter_spark.plans import views
-from skosconverter_spark.plans.hierarchy import dfs_rows
+from skosconverter_spark.plans.local_dfs import dfs_rows_local
 
 CSV_FIELDS = [
     "Title", "Parent", "Concept Scheme", "Definition",
@@ -43,6 +43,7 @@ _DOC_ROWS_SCHEMA = (
     "alt_labels array<string>, notation string, same_as array<string>, "
     "related array<string>"
 )
+_DOC_ROW_COLS = [f.split()[0] for f in _DOC_ROWS_SCHEMA.split(", ")]
 
 
 # Driver-sized paths collect a whole table to one machine. A vocabulary
@@ -51,30 +52,36 @@ _DOC_ROWS_SCHEMA = (
 MAX_DRIVER_ROWS = 5_000_000
 
 
+def _too_big(what: str, max_rows: int) -> ValueError:
+    return ValueError(
+        f"{what} materializes rows on the driver and is gated at "
+        f"{max_rows} rows; this input exceeds it. Use the distributed "
+        "sink (render_documents / write_graph_table) for corpus-sized "
+        "tables, or raise max_rows explicitly."
+    )
+
+
 def guard_driver_sized(df: DataFrame, what: str, max_rows: int = MAX_DRIVER_ROWS) -> None:
     """Fail fast when a driver-sized path is misused on a corpus-sized
     table. limit(max_rows+1).count() early-exits the scan — it never
     moves max_rows rows anywhere, it just proves whether row max_rows+1
     exists. Set max_rows=0 to disable (caller takes responsibility)."""
     if max_rows and df.limit(max_rows + 1).count() > max_rows:
-        raise ValueError(
-            f"{what} materializes rows on the driver and is gated at "
-            f"{max_rows} rows; this input exceeds it. Use the distributed "
-            "sink (render_documents / write_graph_table) for corpus-sized "
-            "tables, or raise max_rows explicitly."
-        )
+        raise _too_big(what, max_rows)
 
 
 def collect_triples(triples: DataFrame, max_rows: int = MAX_DRIVER_ROWS) -> list[tuple]:
-    guard_driver_sized(triples, "collect_triples", max_rows)
     # Arrow transfer instead of .collect(): the row path deserializes one
     # pickled Row per triple and pays a __getattr__ field lookup per
     # column (measured ~2 s of the 3 s skos_forward collect at 177k
     # triples); the Arrow path moves six columnar batches and converts
-    # each column once.
-    tbl = triples.select(
-        "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq"
-    ).toArrow()
+    # each column once. The driver-size gate rides on the same pass —
+    # collecting max_rows+1 rows proves whether the input exceeds it
+    # without evaluating the input plan a second time.
+    cols = triples.select("subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq")
+    tbl = (cols.limit(max_rows + 1) if max_rows else cols).toArrow()
+    if max_rows and tbl.num_rows > max_rows:
+        raise _too_big("collect_triples", max_rows)
     return list(
         zip(*(tbl.column(i).to_pylist() for i in range(tbl.num_columns)))
     )
@@ -82,41 +89,50 @@ def collect_triples(triples: DataFrame, max_rows: int = MAX_DRIVER_ROWS) -> list
 
 def render_text_local(triples: DataFrame, fmt: str, config: EngineConfig) -> str:
     """Whole-document render via the driver-local DFS kernel
-    (plans.local_dfs): one collect, zero fixpoint jobs. The right path
-    for driver-sized vocabularies — which SKOS vocabularies are by
-    construction; the distributed dfs_rows path covers graphs that
-    aren't. A differential test pins both to identical output."""
-    from skosconverter_spark.plans.local_dfs import dfs_rows_local
-
+    (plans.local_dfs): one collect, no grouped-map job. The right path
+    for one driver-sized vocabulary, which SKOS vocabularies are by
+    construction. A differential test pins it to document_rows."""
     rows = dfs_rows_local(collect_triples(triples), config)
     return _KERNELS[fmt](rows)
 
 
 def document_rows(
-    triples: DataFrame, config: EngineConfig, strategy: str = "distributed"
+    triples: DataFrame, config: EngineConfig, vocab_col: str | None = None
 ) -> DataFrame:
     """DFS-ordered row table with full concept metadata, ready to render.
 
-    strategy='local' collects the (vocabulary-sized) triples and runs
-    the driver-local kernel; 'distributed' runs the min-path fixpoint.
-    """
-    if strategy == "local":
-        from skosconverter_spark.plans.local_dfs import dfs_rows_local
+    Runs the local DFS kernel inside ``applyInPandas``, one group per
+    vocabulary: ``vocab_col`` names the column whose values tell the
+    vocabularies apart (carried out as ``vocab_id``); without it every
+    triple is one vocabulary. A vocabulary is driver-sized by contract,
+    so a group above MAX_DRIVER_ROWS triples fails closed."""
+    max_rows = MAX_DRIVER_ROWS  # read at plan build, shipped to workers
+    src = triples.select(
+        (F.col(vocab_col) if vocab_col else F.lit("_all")).alias("vocab_id"),
+        "subj", "pred", "obj", "obj_is_literal", "obj_lang", "seq",
+    )
 
-        local = dfs_rows_local(collect_triples(triples), config)
-        return triples.sparkSession.createDataFrame(local, _DOC_ROWS_SCHEMA)
-    rows = dfs_rows(triples, config)
-    meta = views.concept_meta(
-        triples, config, rows.filter(F.col("uri").isNotNull()).select("uri").distinct()
-    ).drop("label")
-    empty = F.array().cast("array<string>")
-    return rows.join(meta, "uri", "left").select(
-        rows["*"],
-        F.coalesce(F.col("definition"), F.lit("")).alias("definition"),
-        F.coalesce(F.col("alt_labels"), empty).alias("alt_labels"),
-        F.coalesce(F.col("notation"), F.lit("")).alias("notation"),
-        F.coalesce(F.col("same_as"), empty).alias("same_as"),
-        F.coalesce(F.col("related"), empty).alias("related"),
+    def per_vocab(pdf: pd.DataFrame) -> pd.DataFrame:
+        vocab_id = pdf["vocab_id"].iloc[0]
+        if len(pdf) > max_rows:
+            raise ValueError(
+                f"vocabulary {vocab_id!r} has {len(pdf)} triples; the DFS "
+                f"kernel holds one vocabulary in memory and is gated at "
+                f"{max_rows} triples (render.MAX_DRIVER_ROWS)"
+            )
+        rows = dfs_rows_local(
+            zip(
+                pdf["subj"], pdf["pred"], pdf["obj"],
+                pdf["obj_is_literal"], pdf["obj_lang"], pdf["seq"],
+            ),
+            config,
+        )
+        out = pd.DataFrame(rows, columns=_DOC_ROW_COLS)
+        out["vocab_id"] = vocab_id
+        return out
+
+    return src.groupBy("vocab_id").applyInPandas(
+        per_vocab, _DOC_ROWS_SCHEMA + ", vocab_id string"
     )
 
 

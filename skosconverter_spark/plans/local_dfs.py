@@ -1,20 +1,18 @@
-"""Driver-local hierarchy/DFS kernel — the small-vocabulary fast path.
+"""Local hierarchy/DFS kernel — the one DFS implementation.
 
 A SKOS vocabulary is driver-sized by construction (controlled thesauri
 top out at millions of triples; the 100 TB axis of this engine is the
-*pages* corpus, not the concept graph). For that regime, running ~12
-Spark jobs of fixpoint machinery per vocabulary is pure scheduling
-overhead, exactly like shuffling a broadcast-sized join side. This
-kernel computes the same DFS row table as plans.hierarchy.dfs_rows in
-one pass of plain Python over the collected triple list — semantically
-the reference's build_hierarchy + add_concept_row recursion
+*pages* corpus, not the concept graph), and the reference holds the
+whole graph in RAM too. So the DFS row table is one pass of plain
+Python over one vocabulary's triple list — semantically the
+reference's build_hierarchy + add_concept_row recursion
 (skos_converter.py:664-802) with seq-ordered determinism.
 
-Strategy selection lives in operators.render.document_rows:
-'distributed' = hierarchy.dfs_rows (arbitrarily large graphs),
-'local' = this kernel. A differential pytest asserts both produce
-identical rows on the fixture corpus, so the fast path can never drift
-from the scale path.
+Two transports run it: operators.render.document_rows (inside
+``applyInPandas``, one group per vocabulary, so a directory of
+vocabularies renders in parallel) and operators.render.render_text_local
+(on the driver, over one collected vocabulary). A differential pytest
+pins both to identical output.
 """
 
 from __future__ import annotations
@@ -48,8 +46,9 @@ def _local_part(uri: str) -> str:
 
 def dfs_rows_local(triple_rows, config: EngineConfig) -> list[dict]:
     """triple_rows: iterable of (subj, pred, obj, obj_is_literal,
-    obj_lang, seq). Returns DFS row dicts matching dfs_rows' schema plus
-    metadata columns (ready for the render kernels)."""
+    obj_lang, seq). Returns DFS row dicts: the row-table columns plus
+    metadata columns (render._DOC_ROWS_SCHEMA, ready for the render
+    kernels)."""
     triple_rows = sorted(triple_rows, key=lambda t: t[5])
 
     by_sp: dict[tuple, list] = defaultdict(list)  # (subj, pred) -> [(obj, lang)]

@@ -13,12 +13,11 @@ the smallest seq.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skosconverter_spark.config import (
     EngineConfig,
-    OWL_SAME_AS,
     RDF_TYPE,
     RDFS_LABEL,
     SKOS_ALT_LABEL,
@@ -27,7 +26,6 @@ from skosconverter_spark.config import (
     SKOS_DEFINITION,
     SKOS_NOTATION,
     SKOS_PREF_LABEL,
-    SKOS_RELATED,
     SKOS_SCOPE_NOTE,
 )
 
@@ -216,74 +214,4 @@ def uri_fragment_from_label(col):
     API parity as a pure column expression.)"""
     return F.lower(
         F.regexp_replace(F.regexp_replace(col, r"[^\w\s-]", ""), r"\s+", "_")
-    )
-
-
-def concept_meta(triples: DataFrame, config: EngineConfig, uris: DataFrame) -> DataFrame:
-    """The full per-concept metadata record (_get_concept_metadata,
-    skos_converter.py:934-944) for every uri in ``uris``.
-
-    ONE hash aggregation over the relevant triples computes every field
-    (conditional min-struct picks and seq-sorted collect_lists), then one
-    join onto ``uris`` — instead of five separate join+window subtrees.
-    The reference does ~7 indexed lookups per concept; this is the same
-    information in a single shuffle.
-    """
-    rel = triples.filter(
-        F.col("pred").isin(
-            SKOS_PREF_LABEL, SKOS_ALT_LABEL, RDFS_LABEL, SKOS_DEFINITION,
-            SKOS_SCOPE_NOTE, SKOS_NOTATION, OWL_SAME_AS, SKOS_RELATED,
-        )
-    )
-    kind_rank = (
-        F.when(F.col("pred") == SKOS_PREF_LABEL, F.lit(0))
-        .when(F.col("pred") == SKOS_ALT_LABEL, F.lit(1))
-        .when(F.col("pred") == RDFS_LABEL, F.lit(2))
-    )
-    lang_rank = _lang_rank(config)
-    src = rel.select(
-        F.col("subj").alias("uri"),
-        "pred",
-        F.col("obj"),
-        F.coalesce(F.col("obj_lang")).alias("lang"),
-        "seq",
-        kind_rank.alias("kind_rank"),
-    ).withColumn("lang_rank", lang_rank)
-
-    def first_of(pred):
-        return F.min(
-            F.when(F.col("pred") == pred, F.struct("seq", "obj"))
-        )["obj"]
-
-    def list_of(pred):
-        return F.transform(
-            F.array_sort(
-                F.collect_list(F.when(F.col("pred") == pred, F.struct("seq", "obj")))
-            ),
-            lambda s: s["obj"],
-        )
-
-    agg = src.groupBy("uri").agg(
-        F.min(
-            F.when(
-                F.col("kind_rank").isNotNull(),
-                F.struct("kind_rank", "lang_rank", "seq", F.col("obj").alias("label")),
-            )
-        )["label"].alias("label"),
-        first_of(SKOS_DEFINITION).alias("definition_"),
-        first_of(SKOS_SCOPE_NOTE).alias("scope_note_"),
-        first_of(SKOS_NOTATION).alias("notation"),
-        list_of(SKOS_ALT_LABEL).alias("alt_labels"),
-        list_of(OWL_SAME_AS).alias("same_as"),
-        list_of(SKOS_RELATED).alias("related"),
-    )
-    empty = F.array().cast("array<string>")
-    return uris.select("uri").join(agg, "uri", "left").select(
-        "uri",
-        F.coalesce(F.col("label"), uri_local_part(F.col("uri"))).alias("label"),
-        F.coalesce(F.col("definition_"), F.col("scope_note_"), F.lit("")).alias("definition"),
-        F.coalesce(F.col("alt_labels"), empty).alias("alt_labels"),
-        F.coalesce(F.col("notation"), F.lit("")).alias("notation"),
-        F.coalesce(F.col("same_as"), empty).alias("same_as"),
-        F.coalesce(F.col("related"), empty).alias("related"),
     )

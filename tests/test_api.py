@@ -104,3 +104,53 @@ def test_driver_size_guards_trip(spark):
     # render path: the guard fires before any row is pulled to the driver
     with pytest.raises(ValueError):
         render_document_text(big.selectExpr("subj"), "csv", max_rows=10)
+
+
+def _counting(spark):
+    """(accumulator, mapInPandas fn) counting the rows that pass by —
+    once per evaluation of the plan below the counter."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    return seen, count_rows
+
+
+def test_collect_triples_evaluates_input_once(spark):
+    """The driver-size gate and the transfer share one bounded pass: the
+    input plan (parse included) runs once, not once to count and again
+    to collect."""
+    from skosconverter_spark.operators.render import collect_triples
+
+    seen, count_rows = _counting(spark)
+    docs = spark.createDataFrame(
+        [("v", "v", "ttl", load_fixture_text("vocab_basic"))], schema=DOCS
+    ).mapInPandas(count_rows, DOCS)
+    assert collect_triples(ok_triples(extract_triples(docs, EngineConfig())))
+    assert seen.value == 1
+
+
+def test_convert_directory_renders_once(spark, tmp_path, monkeypatch):
+    """Batch skos2notion runs parse → DFS → render once: the per-file
+    cap must not re-evaluate the rendered table before collecting it."""
+    import skosconverter_spark.api as api
+
+    seen, count_rows = _counting(spark)
+    render_documents = api.render_documents
+
+    def counted(*args, **kwargs):
+        out = render_documents(*args, **kwargs)
+        return out.mapInPandas(count_rows, out.schema)
+
+    monkeypatch.setattr(api, "render_documents", counted)
+    src = tmp_path / "in"
+    src.mkdir()
+    names = ["vocab_basic", "vocab_nolang"]
+    for n in names:
+        (src / f"{n}.ttl").write_text(load_fixture_text(n), encoding="utf-8")
+    status = api.convert_directory(spark, str(src), str(tmp_path / "out"), fmt="csv")
+    assert seen.value == len(names)
+    assert {r.status for r in status.collect()} == {"ok"}
