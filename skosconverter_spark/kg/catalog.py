@@ -1,315 +1,105 @@
-"""Catalog seam: where stage outputs commit and how commits are named.
+"""The stage catalog: where stage outputs land and how they commit.
 
-The north-rule deployment writes stage outputs as Iceberg table commits
-and resumes by comparing input SNAPSHOT IDs; this sandbox has plain
-parquet. ``StageRunner`` therefore talks to a ``CatalogAdapter`` and
-never to the storage layer directly, so swapping parquet → Iceberg is
-an adapter change, not a pipeline rewrite:
+Every write goes to a NEW immutable directory ``<base>/data-<n>``; the
+commit is an atomic rename of ``<base>/_MANIFEST.json.tmp`` onto
+``<base>/_MANIFEST.json``, which names that directory. Readers resolve
+only through the manifest, so a crash at any point leaves either the
+previous commit or the new one visible, never a half-written stage or
+data under another commit's fingerprint. It is the Iceberg HadoopCatalog
+commit protocol on a plain filesystem:
 
-==================  ============================  =========================
-concern             ParquetCatalogAdapter          IcebergCatalogAdapter
-==================  ============================  =========================
-stage output        <base>/data parquet files      table commit (snapshot)
-commit record       <base>/_MANIFEST.json          snapshot summary props
-input fingerprint   count:xor-hash of the input    input table snapshot id
-per-part lineage    parquet FOOTER row counts      manifest-file row counts
-partitioned sink    write.partitionBy(...)         partitioned + bucketed
-                                                   table spec
-==================  ============================  =========================
+=========================  ================================
+this catalog               Iceberg
+=========================  ================================
+``data-<n>/`` directory    snapshot
+``_MANIFEST.json`` swap    metadata pointer swap (commit)
+parquet footer row counts  manifest entries (record counts)
+``input_fingerprint``      input table snapshot id
+=========================  ================================
 
-Both adapters expose the same five operations; everything else in
-kg/pipeline.py is adapter-agnostic.
-
-``SnapshotCatalogAdapter`` sits between them: it runs in this sandbox
-(plain filesystem, no Iceberg jars) but implements the Iceberg
-HadoopCatalog COMMIT PROTOCOL faithfully — immutable snapshot data
-directories, versioned metadata JSON carrying summary properties and
-manifest entries, and a version-hint pointer swap as the atomic commit.
-It exists so the "stage = table commit, resume = snapshot comparison,
-lineage = manifest entries" claims are exercised by running tests, not
-asserted: a crash between write and commit leaves an orphan snapshot
-invisible to resume (exactly Iceberg's semantics), and committed
-snapshots stay readable by id after later commits (time travel).
+After the swap, every other ``data-*`` directory (the superseded commit
+and any crash orphans) is deleted, so a stage keeps one copy on disk.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+import os
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+MANIFEST = "_MANIFEST.json"
 
-@dataclass
-class ParquetCatalogAdapter:
-    """Stage persistence on a plain filesystem: parquet data + a JSON
-    manifest as the commit record, footers as the lineage source."""
 
-    codec: str = "zstd"
+class StageCatalog:
+    """Immutable per-write data directories behind an atomic manifest swap."""
+
+    @staticmethod
+    def _manifest(base: Path) -> dict | None:
+        path = base / MANIFEST
+        return json.loads(path.read_text()) if path.exists() else None
+
+    @staticmethod
+    def _data_dirs(base: Path) -> dict[int, Path]:
+        return {
+            int(p.name[5:]): p
+            for p in base.glob("data-*")
+            if p.name[5:].isdigit()
+        }
 
     def committed_fingerprint(self, base: Path) -> str | None:
-        """The input fingerprint recorded by the last commit at this
-        location, or None if never committed."""
-        manifest = base / "_MANIFEST.json"
-        if not manifest.exists():
-            return None
-        return json.loads(manifest.read_text()).get("input_fingerprint")
+        """The input fingerprint of the last commit, or None."""
+        manifest = self._manifest(base)
+        return manifest["input_fingerprint"] if manifest else None
 
-    def write(self, df: DataFrame, base: Path, partition_by: tuple[str, ...] = ()) -> None:
-        w = df.write.mode("overwrite").option("compression", self.codec)
+    def write(
+        self, df: DataFrame, base: Path, partition_by: tuple[str, ...] = ()
+    ) -> str:
+        """Write ``df`` to a fresh ``data-<n>`` directory under ``base`` and
+        return its name. ``n`` counts past every existing directory, crash
+        orphans included, so no name is ever reused."""
+        name = f"data-{max(self._data_dirs(base), default=0) + 1}"
+        # zstd: about half snappy's bytes on the text-heavy stages
+        w = df.write.mode("errorifexists").option("compression", "zstd")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.parquet(str(base / "data"))
+        w.parquet(str(base / name))
+        return name
 
     def read(self, spark: SparkSession, base: Path) -> DataFrame:
-        return spark.read.parquet(str(base / "data"))
-
-    def partition_rows(self, base: Path) -> list[tuple[int, int]]:
-        """(write_partition_id, rows) per output file, from parquet
-        footers only — the Iceberg-manifest analogue: metadata reads,
-        no Spark job, no second scan of the stage output."""
-        import pyarrow.parquet as pq
-
-        out = []
-        # rglob, not glob: a partitioned write (partition_by=...) lands
-        # files under key=value/ subdirectories, which a flat glob
-        # silently reports as zero files
-        for f in sorted((base / "data").rglob("part-*.parquet")):
-            out.append(
-                (int(f.name.split("-")[1]), pq.ParquetFile(f).metadata.num_rows)
-            )
-        return out
+        manifest = self._manifest(base)
+        if manifest is None:
+            raise FileNotFoundError(f"no committed stage at {base}")
+        return spark.read.parquet(str(base / manifest["data"]))
 
     def commit(
-        self, base: Path, stage: str, input_fingerprint: str, rows: int, wall_ms: int
+        self,
+        base: Path,
+        name: str,
+        stage: str,
+        input_fingerprint: str,
+        rows: int,
+        wall_ms: int,
     ) -> None:
-        manifest = base / "_MANIFEST.json"
-        manifest.parent.mkdir(parents=True, exist_ok=True)
-        manifest.write_text(
+        """Point the manifest at ``name`` (the commit), then delete every
+        other data directory."""
+        tmp = base / (MANIFEST + ".tmp")
+        tmp.write_text(
             json.dumps(
                 {
                     "stage": stage,
                     "input_fingerprint": input_fingerprint,
                     "rows": rows,
                     "wall_ms": wall_ms,
+                    # relative to base: stage directories are copied whole
+                    "data": name,
                 },
                 indent=2,
             )
         )
-
-
-@dataclass
-class SnapshotCatalogAdapter:
-    """Iceberg HadoopCatalog commit protocol on a plain filesystem.
-
-    Layout per stage table (mirrors iceberg's HadoopTableOperations,
-    apache/iceberg core/src/.../hadoop/HadoopTableOperations.java):
-
-    - ``<base>/snap-<v>/``          immutable snapshot data (parquet)
-    - ``<base>/metadata/v<v>.json`` snapshot metadata: id, parent id,
-      manifest entries [(file, record_count)], summary properties
-    - ``<base>/metadata/version-hint.text``  the current-version pointer;
-      REWRITING IT IS THE COMMIT — until then the new snapshot is an
-      orphan no reader resolves (crash-safe by construction)
-
-    ``write`` stages a new snapshot + pending metadata; ``commit``
-    stamps the input fingerprint into the summary and swings the hint.
-    ``committed_fingerprint`` resolves ONLY through the hint, so an
-    uncommitted write never satisfies resume. ``read`` accepts an
-    explicit ``snapshot_id`` for time travel over committed snapshots.
-    ``partition_rows`` serves lineage from the manifest entries recorded
-    at write time — metadata-only, like Iceberg's manifest scan."""
-
-    codec: str = "zstd"
-    # snapshots this adapter instance has written but not yet committed
-    # (base -> version): a writer sees its own in-flight snapshot, every
-    # other reader — including a restart after a crash — resolves only
-    # through the committed version hint, so orphans are invisible
-    _inflight: dict = field(default_factory=dict)
-
-    _COMMIT_PROP = "skosconverter.input_fingerprint"
-
-    def _meta_dir(self, base: Path) -> Path:
-        return base / "metadata"
-
-    def _versions(self, base: Path) -> list[int]:
-        md = self._meta_dir(base)
-        if not md.exists():
-            return []
-        return sorted(
-            int(p.stem[1:]) for p in md.glob("v*.json") if p.stem[1:].isdigit()
-        )
-
-    def _current_version(self, base: Path) -> int | None:
-        hint = self._meta_dir(base) / "version-hint.text"
-        if not hint.exists():
-            return None
-        return int(hint.read_text().strip())
-
-    def _load_meta(self, base: Path, version: int) -> dict:
-        return json.loads((self._meta_dir(base) / f"v{version}.json").read_text())
-
-    def committed_fingerprint(self, base: Path) -> str | None:
-        v = self._current_version(base)
-        if v is None:
-            return None
-        return self._load_meta(base, v)["summary"].get(self._COMMIT_PROP)
-
-    def write(self, df: DataFrame, base: Path, partition_by: tuple[str, ...] = ()) -> None:
-        versions = self._versions(base)
-        v = (versions[-1] + 1) if versions else 1
-        snap = base / f"snap-{v}"
-        w = df.write.mode("overwrite").option("compression", self.codec)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(snap))
-        import pyarrow.parquet as pq
-
-        # rglob, not glob: partitioned writes land part files under
-        # key=value/ subdirectories; a flat glob recorded an empty
-        # manifest for them (lineage silently reported zero files)
-        manifest = [
-            [f.name, pq.ParquetFile(f).metadata.num_rows]
-            for f in sorted(snap.rglob("part-*.parquet"))
-        ]
-        if partition_by and not manifest:
-            raise RuntimeError(
-                f"partitioned write at {snap} produced no part files"
-            )
-        md = self._meta_dir(base)
-        md.mkdir(parents=True, exist_ok=True)
-        (md / f"v{v}.json").write_text(
-            json.dumps(
-                {
-                    "snapshot_id": v,
-                    "parent_snapshot_id": versions[-1] if versions else None,
-                    "manifest": manifest,
-                    "summary": {},
-                },
-                indent=2,
-            )
-        )
-        self._inflight[str(base)] = v
-
-    def _resolve(self, base: Path, snapshot_id: int | None) -> int:
-        if snapshot_id is not None:
-            # time travel is over COMMITTED snapshots: an explicit id
-            # beyond the committed hint is either this instance's own
-            # in-flight write (visible to its writer) or a crash orphan,
-            # which must stay invisible
-            committed = self._current_version(base)
-            if snapshot_id != self._inflight.get(str(base)) and (
-                committed is None or snapshot_id > committed
-            ):
-                raise ValueError(
-                    f"snapshot {snapshot_id} at {base} is not committed "
-                    f"(current version: {committed})"
-                )
-            return snapshot_id
-        v = self._inflight.get(str(base), self._current_version(base))
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot at {base}")
-        return v
-
-    def read(
-        self, spark: SparkSession, base: Path, snapshot_id: int | None = None
-    ) -> DataFrame:
-        return spark.read.parquet(
-            str(base / f"snap-{self._resolve(base, snapshot_id)}")
-        )
-
-    def partition_rows(self, base: Path) -> list[tuple[int, int]]:
-        v = self._resolve(base, None)
-        return [
-            (int(name.split("-")[1]), int(rows))
-            for name, rows in self._load_meta(base, v)["manifest"]
-        ]
-
-    def commit(
-        self, base: Path, stage: str, input_fingerprint: str, rows: int, wall_ms: int
-    ) -> None:
-        # commit THIS instance's in-flight snapshot, not whatever
-        # metadata file is newest on disk — two adapters interleaving
-        # write() on one table would otherwise commit each other's
-        # snapshot under the wrong fingerprint
-        v = self._inflight.get(str(base), None)
-        if v is None:
-            v = self._versions(base)[-1]
-        meta_path = self._meta_dir(base) / f"v{v}.json"
-        meta = json.loads(meta_path.read_text())
-        meta["summary"] = {
-            self._COMMIT_PROP: input_fingerprint,
-            "stage": stage,
-            "total-records": rows,
-            "wall-ms": wall_ms,
-        }
-        meta_path.write_text(json.dumps(meta, indent=2))
-        hint = self._meta_dir(base) / "version-hint.text"
-        tmp = hint.with_suffix(".text.tmp")
-        tmp.write_text(str(v))
-        tmp.replace(hint)  # the atomic pointer swap IS the commit
-        self._inflight.pop(str(base), None)
-
-
-@dataclass
-class IcebergCatalogAdapter:
-    """The production shape: each stage is an Iceberg table under
-    ``namespace``; a commit IS the snapshot, the resume fingerprint is
-    read from the snapshot the stage was committed against, lineage
-    comes from the snapshot's manifest entries. Requires an Iceberg
-    catalog on the session (spark.sql.catalog.<name> configured with
-    the iceberg runtime jar — not present in this sandbox, hence the
-    guarded probe)."""
-
-    namespace: str = "kg"
-    catalog: str = "spark_catalog"
-
-    _COMMIT_PROP = "skosconverter.input_fingerprint"
-
-    def _table(self, base: Path) -> str:
-        return f"{self.catalog}.{self.namespace}.{base.name}"
-
-    def _require_iceberg(self, spark: SparkSession) -> None:
-        if (
-            spark.conf.get(f"spark.sql.catalog.{self.catalog}", None) is None
-        ):  # pragma: no cover - sandbox has no iceberg runtime
-            raise NotImplementedError(
-                f"IcebergCatalogAdapter needs spark.sql.catalog.{self.catalog} "
-                "configured with the Iceberg runtime; this environment has "
-                "plain parquet only — use ParquetCatalogAdapter."
-            )
-
-    def committed_fingerprint(self, base: Path) -> str | None:  # pragma: no cover
-        raise NotImplementedError(
-            "read snapshot summary property "
-            f"{self._COMMIT_PROP} of {self._table(base)} (requires catalog)"
-        )
-
-    def write(self, df: DataFrame, base: Path, partition_by: tuple[str, ...] = ()) -> None:  # pragma: no cover
-        self._require_iceberg(df.sparkSession)
-        w = df.writeTo(self._table(base)).using("iceberg")
-        if partition_by:
-            # one varargs call: DataFrameWriterV2.partitionedBy REPLACES the
-            # partitioning each call, so a per-column loop would keep only
-            # the last column of a multi-column spec
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*(F.col(c) for c in partition_by))
-        w.createOrReplace()
-
-    def read(self, spark: SparkSession, base: Path) -> DataFrame:  # pragma: no cover
-        self._require_iceberg(spark)
-        return spark.read.table(self._table(base))
-
-    def partition_rows(self, base: Path) -> list[tuple[int, int]]:  # pragma: no cover
-        raise NotImplementedError(
-            f"SELECT file, record_count FROM {self._table(base)}.files "
-            "(requires catalog)"
-        )
-
-    def commit(self, base: Path, stage: str, input_fingerprint: str, rows: int, wall_ms: int) -> None:  # pragma: no cover
-        raise NotImplementedError(
-            "ALTER TABLE ... SET TBLPROPERTIES on the committed snapshot "
-            "(requires catalog)"
-        )
+        os.replace(tmp, base / MANIFEST)
+        for path in self._data_dirs(base).values():
+            if path.name != name:
+                shutil.rmtree(path, ignore_errors=True)

@@ -9,12 +9,14 @@ Stage graph (north_star):
     raw_triples ∪ vocabulary ──canonicalization closure──▶ triples
     triples ─▶ partitioned graph table (pred-partitioned parquet)
 
-Resumability (north_rule): every stage writes a parquet checkpoint plus
-a ``_MANIFEST.json`` recording the stage name, its input fingerprint
-and row count. On rerun, a stage whose manifest matches the current
-input fingerprint is loaded instead of recomputed — resume-from-any-
-completed-stage with no extra bookkeeping. (This container has plain
-parquet; on a real deployment these writes are Iceberg commits and the
+Resumability (north_rule): every stage commits through
+``kg/catalog.py::StageCatalog``: its output goes to a new immutable
+parquet directory, and an atomic swap of ``_MANIFEST.json`` (stage name,
+input fingerprint, row count, data directory) is the commit. On rerun,
+a stage whose manifest matches the current input fingerprint is loaded
+instead of recomputed. A crash between write and commit leaves the
+previous commit in force, so resume is either correct or a rebuild.
+(On an Iceberg deployment the swap is a table commit and the
 fingerprint is the input snapshot id.)
 
 Lineage/metrics (north_rule): each stage emits per-output-partition row
@@ -38,6 +40,7 @@ from pyspark.sql import functions as F
 
 from skosconverter_spark.config import EngineConfig
 from skosconverter_spark.kg.canonicalize import canonicalize_triples
+from skosconverter_spark.kg.catalog import StageCatalog
 from skosconverter_spark.kg.extract import extract_text, salted_repartition
 from skosconverter_spark.kg.linking import link_best, score_candidates
 from skosconverter_spark.kg.mentions import mention_candidates, scan_mentions
@@ -50,16 +53,7 @@ class StageRunner:
     root: str
     config: EngineConfig = field(default_factory=EngineConfig)
     force: bool = False  # recompute even when a manifest matches
-    codec: str = "zstd"  # checkpoint compression (zstd ≈ 2× smaller than
-    # snappy on text-heavy stages → half the bytes through the shared
-    # checkpoint store; decode cost is amortized across executors)
-    catalog: object | None = None  # CatalogAdapter; default parquet+manifest
-
-    def __post_init__(self):
-        if self.catalog is None:
-            from skosconverter_spark.kg.catalog import ParquetCatalogAdapter
-
-            self.catalog = ParquetCatalogAdapter(codec=self.codec)
+    catalog: StageCatalog = field(default_factory=StageCatalog)
 
     def _base(self, stage: str) -> Path:
         return Path(self.root) / stage
@@ -70,8 +64,17 @@ class StageRunner:
         input_fingerprint: str,
         build,  # () -> DataFrame
         persist: bool = True,
+        partition_by: tuple[str, ...] = (),
     ) -> DataFrame:
-        """Build-or-load one stage; write checkpoint + manifest + metrics.
+        """Build-or-load one stage; write checkpoint + metrics, then commit.
+
+        A persisted stage is written to a new data directory
+        (``partition_by`` columns become ``key=value/`` subdirectories),
+        its lineage is read from that directory's parquet footers, its
+        metrics are written, and only then does ``self.catalog`` commit
+        it; the returned DataFrame reads the committed files back. A
+        failure anywhere before the commit leaves the previous commit in
+        force.
 
         ``persist=False`` materializes the stage executor-locally
         (localCheckpoint → memory/local-disk blocks) instead of writing
@@ -81,12 +84,7 @@ class StageRunner:
         checkpoint store. The trade: the stage is NOT resumable (no
         manifest) — a rerun rebuilds it from its persisted inputs. A
         matching manifest from a previous persisted run is still
-        honored either way.
-
-        Storage/commit mechanics live behind ``self.catalog``
-        (kg/catalog.py): parquet + JSON manifest here, Iceberg snapshot
-        commits on a real deployment — the pipeline never touches the
-        storage layer directly."""
+        honored either way."""
         base = self._base(stage)
         metrics = base / "metrics"
         if (
@@ -121,16 +119,11 @@ class StageRunner:
                 or [(stage, -1, 0, wall_ms, input_fingerprint)],
             )
             return out
-        self.catalog.write(df, base)
+        name = self.catalog.write(df, base, partition_by)
         if debug:
             print(f"    [{stage}] write: {time.time() - t0:.2f}s", flush=True)
-        out = self.catalog.read(self.spark, base)
         wall_ms = int((time.time() - t0) * 1000)
-        # per-partition lineage from the catalog's commit metadata
-        # (parquet footers / Iceberg manifest entries) — metadata-only,
-        # no Spark job, no second scan of the stage output
-        per_part_rows = self.catalog.partition_rows(base)
-        rows = sum(n for _, n in per_part_rows)
+        per_part_rows = _footer_row_counts(base / name)
         _write_metrics_parquet(
             metrics,
             [
@@ -139,8 +132,15 @@ class StageRunner:
             ]
             or [(stage, -1, 0, wall_ms, input_fingerprint)],
         )
-        self.catalog.commit(base, stage, input_fingerprint, rows, wall_ms)
-        return out
+        self.catalog.commit(
+            base,
+            name,
+            stage,
+            input_fingerprint,
+            sum(n for _, n in per_part_rows),
+            wall_ms,
+        )
+        return self.catalog.read(self.spark, base)
 
     def stage_metrics(self) -> DataFrame:
         """All stages' per-partition lineage metrics."""
@@ -155,6 +155,20 @@ _METRICS_SCHEMA = (
     ("wall_ms", "int64"),
     ("input_fingerprint", "string"),
 )
+
+
+def _footer_row_counts(data_dir: Path) -> list[tuple[int, int]]:
+    """(write_partition_id, rows) per written file, from parquet footers
+    only — the Iceberg-manifest analogue: metadata reads, no Spark job,
+    no second scan of the stage output."""
+    import pyarrow.parquet as pq
+
+    # rglob, not glob: a partitioned write lands files under key=value/
+    # subdirectories, which a flat glob silently reports as zero files
+    return [
+        (int(f.name.split("-")[1]), pq.ParquetFile(f).metadata.num_rows)
+        for f in sorted(data_dir.rglob("part-*.parquet"))
+    ]
 
 
 def _write_metrics_parquet(metrics: Path, rows: list[tuple]) -> None:
@@ -200,7 +214,6 @@ def run_pipeline(
     link_threshold: float = 0.25,
     force: bool = False,
     persist_intermediate: bool = True,
-    codec: str = "zstd",
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full KG pipeline; returns the stage outputs.
 
@@ -214,7 +227,7 @@ def run_pipeline(
     always persisted."""
     config = config or EngineConfig()
     parts = partitions or spark.sparkContext.defaultParallelism
-    runner = StageRunner(spark, root, config, force=force, codec=codec)
+    runner = StageRunner(spark, root, config, force=force)
 
     # the two input fingerprints are independent single-row aggregations;
     # submit them concurrently so the second is not a serial round on the
@@ -252,8 +265,6 @@ def run_pipeline(
     # scheduler interleaves their tasks, so the cluster never idles while
     # one stage's tail tasks drain)
     from concurrent.futures import ThreadPoolExecutor
-
-    graph_base = Path(root) / "60_graph"
 
     with ThreadPoolExecutor(max_workers=5) as pool:
         f_mentions = pool.submit(
@@ -341,10 +352,15 @@ def run_pipeline(
                 ),
             )
             # final graph table: pred-partitioned so triple-pattern scans
-            # prune (committed through the catalog adapter like every
-            # stage; on Iceberg this is a partitioned+bucketed table spec)
-            runner.catalog.write(triples_, graph_base, partition_by=("pred",))
-            return triples_, runner.catalog.read(spark, graph_base)
+            # prune; a stage like the others, committed under the
+            # fingerprint of the triples it is written from
+            graph_ = runner.run_stage(
+                "60_graph",
+                f"{fp_pages}|{fp_vocab}",
+                lambda: triples_,
+                partition_by=("pred",),
+            )
+            return triples_, graph_
 
         f_links = pool.submit(_links_chain)
         f_cg = pool.submit(_canonical_graph_chain)

@@ -1,10 +1,12 @@
 """Web-scale KG pipeline stages on the synthesized pages corpus:
 extraction invariant, mention detection known answers, linking,
-canonicalization closure, checkpoint/resume, lineage metrics."""
+canonicalization closure, checkpoint/resume, lineage metrics, and the
+stage catalog's crash consistency."""
 
 from __future__ import annotations
 
 import hashlib
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +18,7 @@ from skosconverter_spark.kg.canonicalize import (
     equivalence_edges,
     transitive_closure,
 )
+from skosconverter_spark.kg.catalog import StageCatalog
 from skosconverter_spark.kg.extract import extract_text
 from skosconverter_spark.kg.mentions import mention_candidates, scan_mentions
 from skosconverter_spark.kg.pipeline import run_pipeline
@@ -173,7 +176,7 @@ def test_pipeline_unpersisted_intermediates_identical(spark, pages, vocab, tmp_p
     assert local["links"].count() == persisted["links"].count()
     for stage in ("20_mentions", "40_page_triples"):
         base = tmp_path / "kg_l" / stage
-        assert not (base / "data").exists()
+        assert not list(base.glob("data*"))
         assert not (base / "_MANIFEST.json").exists()
         assert (base / "metrics").exists()
     stages = {r.stage for r in local["metrics"].select("stage").distinct().collect()}
@@ -196,36 +199,175 @@ def test_salted_repartition_bounds_skew(spark, pages):
     assert min(salt_sizes) >= 0.4 * mean, f"salted partitions skewed: {salt_sizes}"
 
 
-def test_catalog_adapter_seam(spark, pages, vocab, tmp_path):
-    """StageRunner delegates storage/commit to a CatalogAdapter: an
-    explicit parquet adapter behaves like the default, and the Iceberg
-    adapter fails loudly (not silently) without a configured catalog."""
-    import pytest as _pytest
+# ---------------------------------------------------------------------------
+# StageCatalog: immutable data directories behind an atomic manifest swap
+# ---------------------------------------------------------------------------
 
-    from skosconverter_spark.kg.catalog import (
-        IcebergCatalogAdapter,
-        ParquetCatalogAdapter,
-    )
+
+def _ids(spark, n):
+    return spark.range(n).select(F.col("id").alias("doc_id"))
+
+
+def test_catalog_adapter_seam(spark, tmp_path):
+    """StageRunner delegates storage and commit to its catalog: stage =
+    commit, resume = fingerprint match on the committed manifest (no
+    rebuild), lineage = footer row counts of the data directory the
+    commit names."""
     from skosconverter_spark.kg.pipeline import StageRunner, fingerprint_of
 
-    runner = StageRunner(
-        spark, str(tmp_path / "kg"), catalog=ParquetCatalogAdapter(codec="snappy")
-    )
-    fp = fingerprint_of(pages, ["url"])
-    out = runner.run_stage("10_extract", fp, lambda: pages.select("url"))
-    assert out.count() == pages.count()
-    # commit recorded -> second call loads instead of rebuilding
+    docs = _ids(spark, 100)
+    runner = StageRunner(spark, str(tmp_path / "kg"), catalog=StageCatalog())
+    fp = fingerprint_of(docs, ["doc_id"])
+    assert runner.run_stage("10_extract", fp, lambda: docs).count() == 100
     calls = []
-    out2 = runner.run_stage(
-        "10_extract", fp, lambda: calls.append(1) or pages.select("url")
-    )
-    assert out2.count() == pages.count() and not calls
-    # lineage came from the adapter's commit metadata
-    assert runner.stage_metrics().count() > 0
+    out2 = runner.run_stage("10_extract", fp, lambda: calls.append(1) or docs)
+    assert out2.count() == 100 and not calls, "matching commit must resume"
+    m = runner.stage_metrics()
+    assert m.count() > 0
+    assert m.agg(F.sum("rows_out")).collect()[0][0] == 100
 
-    ice = StageRunner(spark, str(tmp_path / "ice"), catalog=IcebergCatalogAdapter())
-    with _pytest.raises(NotImplementedError, match="requires catalog"):
-        ice.run_stage("10_extract", fp, lambda: pages.select("url"))
+
+def test_stage_catalog_rebuild_and_orphans(spark, tmp_path):
+    """Changed input -> rebuild into a new data directory, the old one
+    is deleted at commit; an uncommitted write is an orphan no restart
+    resolves (a crash between write and commit must not satisfy
+    resume)."""
+    from skosconverter_spark.kg.pipeline import StageRunner, fingerprint_of
+
+    base = tmp_path / "kg" / "10_extract"
+    v1, v2 = _ids(spark, 10), _ids(spark, 25)
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    fp1, fp2 = fingerprint_of(v1, ["doc_id"]), fingerprint_of(v2, ["doc_id"])
+    runner.run_stage("10_extract", fp1, lambda: v1)
+    runner.run_stage("10_extract", fp2, lambda: v2)  # input changed: rebuild
+    cat = runner.catalog
+    assert cat.committed_fingerprint(base) == fp2
+    assert cat.read(spark, base).count() == 25
+    manifest = json.loads((base / "_MANIFEST.json").read_text())
+    assert manifest["rows"] == 25 and manifest["data"] == "data-2"
+    assert sorted(p.name for p in base.glob("data*")) == ["data-2"]
+    # crash simulation: write without commit, then a fresh catalog
+    # (process restart) must still resolve the committed directory
+    assert cat.write(_ids(spark, 3), base) == "data-3"
+    fresh = StageCatalog()
+    assert fresh.committed_fingerprint(base) == fp2
+    assert fresh.read(spark, base).count() == 25, "orphan must be invisible"
+    # the next write never reuses the orphan's name
+    assert fresh.write(_ids(spark, 4), base) == "data-4"
+
+
+def test_partitioned_write_lineage_not_empty(spark, tmp_path):
+    """A partitioned write lands its files under key=value/
+    subdirectories; its lineage must still count every row."""
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    df = spark.createDataFrame(
+        [(i, ["a", "b", "c"][i % 3]) for i in range(30)], "id long, pred string"
+    )
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    out = runner.run_stage("60_graph", "fp", lambda: df, partition_by=("pred",))
+    assert out.count() == 30
+    base = tmp_path / "kg" / "60_graph"
+    assert sorted(p.name for p in (base / "data-1").glob("pred=*")) == [
+        "pred=a", "pred=b", "pred=c"
+    ]
+    assert json.loads((base / "_MANIFEST.json").read_text())["rows"] == 30
+    assert runner.stage_metrics().agg(F.sum("rows_out")).collect()[0][0] == 30
+
+
+def test_uncommitted_write_invisible_to_fresh_catalog(spark, tmp_path):
+    """A write that was never committed is exactly the state the
+    protocol exists to hide: no catalog resolves it until its commit."""
+    base = tmp_path / "t"
+    writer = StageCatalog()
+    name = writer.write(_ids(spark, 5), base)  # staged, never committed
+    fresh = StageCatalog()
+    assert fresh.committed_fingerprint(base) is None
+    with pytest.raises(FileNotFoundError, match="no committed stage"):
+        fresh.read(spark, base)
+    writer.commit(base, name, "t", "fp", 5, 0)
+    assert fresh.committed_fingerprint(base) == "fp"
+    assert fresh.read(spark, base).count() == 5
+
+
+def test_resume_after_uncommitted_write_serves_committed_rows(spark, tmp_path):
+    """Commit F1 with 10 rows, then write 3 rows and crash before the
+    commit: resume at F1 must load the committed 10 rows, not rebuild
+    and not serve the uncommitted 3."""
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    runner.run_stage("s", "F1", lambda: _ids(spark, 10))
+    runner.catalog.write(_ids(spark, 3), tmp_path / "kg" / "s")
+    calls = []
+    out = StageRunner(spark, str(tmp_path / "kg")).run_stage(
+        "s", "F1", lambda: calls.append(1) or _ids(spark, 99)
+    )
+    assert out.count() == 10 and not calls
+
+
+def test_failed_forced_rebuild_keeps_committed_stage(spark, tmp_path):
+    """A forced rebuild whose write job fails must leave the previous
+    commit readable: resume at its fingerprint serves its rows."""
+    from skosconverter_spark.kg.pipeline import StageRunner
+
+    runner = StageRunner(spark, str(tmp_path / "kg"))
+    runner.run_stage("s", "F1", lambda: _ids(spark, 10))
+    boom = _ids(spark, 5).select(
+        F.raise_error(F.lit("injected")).cast("long").alias("doc_id")
+    )
+    forced = StageRunner(spark, str(tmp_path / "kg"), force=True)
+    with pytest.raises(Exception, match="injected"):
+        forced.run_stage("s", "F1", lambda: boom)
+    calls = []
+    out = StageRunner(spark, str(tmp_path / "kg")).run_stage(
+        "s", "F1", lambda: calls.append(1) or _ids(spark, 99)
+    )
+    assert out.count() == 10 and not calls
+
+
+PIPELINE_TABLES = ("pages_text", "mentions", "links", "page_triples", "triples", "graph")
+
+
+def _sorted_rows(out):
+    return {t: sorted(repr(tuple(r)) for r in out[t].collect()) for t in PIPELINE_TABLES}
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, pages, vocab, tmp_path_factory):
+    root = tmp_path_factory.mktemp("kg_clean")
+    return _sorted_rows(run_pipeline(spark, pages, vocab, str(root), partitions=4))
+
+
+@pytest.mark.parametrize(
+    "failing",
+    ["10_extract", "20_mentions", "30_links", "40_page_triples", "50_canonical", "60_graph"],
+)
+def test_commit_crash_then_resume_matches_clean_run(
+    spark, pages, vocab, tmp_path, monkeypatch, clean_run, failing
+):
+    """A crash between one stage's write and its commit fails the run;
+    rerunning on the same root rebuilds that stage, resumes the others,
+    and returns exactly the clean run's rows."""
+    root = tmp_path / "kg"
+    commit = StageCatalog.commit
+
+    def crashing_commit(self, base, name, stage, *args):
+        if stage == failing:
+            raise RuntimeError(f"injected crash before committing {stage}")
+        return commit(self, base, name, stage, *args)
+
+    monkeypatch.setattr(StageCatalog, "commit", crashing_commit)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    assert list((root / failing).glob("data-*")), "the write must precede the crash"
+    assert not (root / failing / "_MANIFEST.json").exists()
+    monkeypatch.undo()
+
+    out = run_pipeline(spark, pages, vocab, str(root), partitions=4)
+    assert _sorted_rows(out) == clean_run
+    # the commit deleted the orphan: one data directory per stage
+    assert [p.name for p in (root / failing).glob("data-*")] == ["data-2"]
 
 
 def test_pipeline_adversarial_pages(spark, vocab, tmp_path):

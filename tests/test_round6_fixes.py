@@ -8,8 +8,6 @@ correctness fix taken from ADVICE.md) to its observable contract:
 - unrolled fixed-dim cosine ≡ interpreted fold, bit for bit
 - doc_id-partitioned shingle table: downstream doc-keyed aggregations
   plan no additional exchange
-- catalog adapters record partitioned writes in their manifests
-- snapshot time travel rejects uncommitted orphan ids
 """
 
 from __future__ import annotations
@@ -142,45 +140,3 @@ def test_doc_shingles_partitioning_feeds_signature_agg(spark):
         if "Exchange" in line and "ENSURE_REQUIREMENTS" in line
     ]
     assert not ensure, f"signature agg re-shuffled: {ensure}"
-
-
-# ---------------------------------------------------------------------------
-# catalog: partitioned manifests + orphan time travel
-# ---------------------------------------------------------------------------
-
-
-def test_partitioned_write_manifest_not_empty(spark, tmp_path):
-    from skosconverter_spark.kg.catalog import (
-        ParquetCatalogAdapter,
-        SnapshotCatalogAdapter,
-    )
-
-    df = spark.createDataFrame(
-        [(i, ["a", "b", "c"][i % 3]) for i in range(30)], "id long, pred string"
-    )
-    pq_ad = ParquetCatalogAdapter()
-    pq_ad.write(df, tmp_path / "t1", partition_by=("pred",))
-    assert sum(n for _, n in pq_ad.partition_rows(tmp_path / "t1")) == 30
-
-    sn_ad = SnapshotCatalogAdapter()
-    sn_ad.write(df, tmp_path / "t2", partition_by=("pred",))
-    assert sum(n for _, n in sn_ad.partition_rows(tmp_path / "t2")) == 30
-
-
-def test_time_travel_rejects_uncommitted_orphan(spark, tmp_path):
-    """read(snapshot_id=...) beyond the committed hint must fail for any
-    adapter that did not itself stage that write — an uncommitted crash
-    orphan is exactly the state the protocol exists to hide."""
-    from skosconverter_spark.kg.catalog import SnapshotCatalogAdapter
-
-    base = tmp_path / "t"
-    df = spark.range(5).select(F.col("id").alias("doc_id"))
-    writer = SnapshotCatalogAdapter()
-    writer.write(df, base)  # staged, never committed
-    # the writer itself may read its in-flight snapshot
-    assert writer.read(spark, base, snapshot_id=1).count() == 5
-    fresh = SnapshotCatalogAdapter()
-    with pytest.raises(ValueError, match="not committed"):
-        fresh.read(spark, base, snapshot_id=1)
-    writer.commit(base, "t", "fp", 5, 0)
-    assert fresh.read(spark, base, snapshot_id=1).count() == 5
