@@ -231,6 +231,36 @@ def test_srp_flips2_operating_point(spark):
 
 
 # ---------------------------------------------------------------------------
+# StageCatalog: stage commit survives a restart
+# ---------------------------------------------------------------------------
+
+
+def test_snapshot_catalog_stage_roundtrip(spark, tmp_path):
+    """StageRunner through the manifest-commit catalog: stage = commit,
+    resume = fingerprint match on the committed manifest (no rebuild),
+    also from a fresh runner and catalog (process restart); lineage =
+    footer row counts recorded at write time."""
+    from skosconverter_spark.kg.catalog import StageCatalog
+    from skosconverter_spark.kg.pipeline import StageRunner, fingerprint_of
+
+    docs = spark.range(100).select(F.col("id").alias("doc_id"))
+    runner = StageRunner(spark, str(tmp_path / "kg"), catalog=StageCatalog())
+    fp = fingerprint_of(docs, ["doc_id"])
+    assert runner.run_stage("10_extract", fp, lambda: docs).count() == 100
+    calls = []
+    restarted = StageRunner(
+        spark, str(tmp_path / "kg"), catalog=StageCatalog()
+    )
+    out2 = restarted.run_stage(
+        "10_extract", fp, lambda: calls.append(1) or docs
+    )
+    assert out2.count() == 100 and not calls, "matching commit must resume"
+    m = restarted.stage_metrics()
+    assert m.count() > 0
+    assert m.agg(F.sum("rows_out")).collect()[0][0] == 100
+
+
+# ---------------------------------------------------------------------------
 # shared_passages: verbatim containment triage
 # ---------------------------------------------------------------------------
 
